@@ -13,9 +13,11 @@ Format notes: bitstreams are MSB-first, zero-padded to a byte boundary;
 first_ts / first value of each measure ride out-of-band in chunk columns
 (n_points, first_ts, first_val, first_bytes).
 
-Encode runs inside Arrow-batched ``applyInPandas`` grouped by (host, tier) —
-mirroring the reference's chunked ``pack(1000).par_map`` bulk pipeline
-(/root/reference/libs/mimir/src/rubber.rs:684-699) whose chunk = our Arrow
+Encode runs one numpy pass per Arrow batch (``mapInPandas`` over rows
+hash-partitioned and sorted by (host[, month], bucket_ts)): every chunk of
+the batch is segmented by a first-point mask and all of them are packed by
+one bit-packing call per stream — mirroring the reference's chunked
+``pack(1000).par_map`` bulk pipeline (rubber.rs) whose chunk = our Arrow
 batch. No per-row Python anywhere on the encode path (north rule).
 
 Decode is vectorized in three phases (see the decode section): a per-bit
@@ -30,10 +32,11 @@ successors (e.g. Chimp, VLDB 2022) — this engine pins the simplified XOR
 variant above for vectorizability; swapping in a Chimp-style leading-zero
 table is a kernel-local change behind the same chunk schema.
 
-Scale: one task per (host, tier) group; groups are rolled-up series (bounded
-by time range, not doc count) so group size is even across hosts — the skew
-answer of gapfill.py applies here too. At 100 TB, chunking further splits by
-time (chunk_start) via the same groupby key extension.
+Scale: rows are hash-partitioned by the chunk keys, so a partition holds
+whole (host[, month]) series (bounded by time range, not doc count — the
+skew answer of gapfill.py applies here too). A series longer than an Arrow
+batch is carried into the next batch; ``max_points_per_chunk`` bounds
+chunks (and the carry) at 100 TB.
 """
 
 from __future__ import annotations
@@ -80,38 +83,34 @@ def _pack_fields(fields: list[tuple[np.ndarray, np.ndarray]]) -> bytes:
     return np.packbits(out).tobytes()
 
 
-def encode_dod(ts: np.ndarray) -> bytes:
-    """ts: int64 epoch seconds, ascending. Bitstream for points 1..n-1."""
-    ts = np.asarray(ts, dtype=np.int64)
-    if len(ts) < 2:
-        return b""
-    deltas = np.diff(ts)
-    dod = np.diff(np.concatenate([[0], deltas]))  # dod_1 = delta_1
-    a = np.abs(dod)
-    # range ladder (asymmetric upper bounds per Gorilla §4.1.1)
-    zero = dod == 0
-    r7 = ~zero & (dod >= -63) & (dod <= 64)
-    r9 = ~zero & ~r7 & (dod >= -255) & (dod <= 256)
-    r12 = ~zero & ~r7 & ~r9 & (dod >= -2047) & (dod <= 2048)
-    r64 = ~zero & ~r7 & ~r9 & ~r12
-
-    prefix_val = np.select([zero, r7, r9, r12, r64], [0, 0b10, 0b110, 0b1110, 0b1111]).astype(np.uint64)
-    prefix_len = np.select([zero, r7, r9, r12, r64], [1, 2, 3, 4, 4]).astype(np.int64)
+def _dod_fields(ts: np.ndarray, first: np.ndarray) -> list[tuple[np.ndarray, np.ndarray]]:
+    """(prefix, payload) fields of the delta-of-delta stream. ``first``
+    marks each chunk's first point: it rides out of band (zero-length
+    fields) and resets the delta chain (d_0 = 0, so dod_1 = delta_1)."""
+    d = np.diff(ts, prepend=ts[:1])
+    d[first] = 0
+    dod = d - np.concatenate([[0], d[:-1]])
+    # range ladder (asymmetric upper bounds per Gorilla §4.1.1); np.select
+    # takes the first matching range, the 64-bit case is the default
+    ranges = [dod == 0, (dod >= -63) & (dod <= 64), (dod >= -255) & (dod <= 256),
+              (dod >= -2047) & (dod <= 2048)]
+    prefix_val = np.select(ranges, [0, 0b10, 0b110, 0b1110], 0b1111).astype(np.uint64)
+    prefix_len = np.select(ranges, [1, 2, 3, 4], 4).astype(np.int64)
     payload_val = np.select(
-        [zero, r7, r9, r12, r64],
-        [0, dod + 63, dod + 255, dod + 2047, dod],
-    ).astype(np.int64).astype(np.uint64)  # two's complement for r64
-    payload_len = np.select([zero, r7, r9, r12, r64], [0, 7, 9, 12, 64]).astype(np.int64)
-    _ = a
-    return _pack_fields([(prefix_val, prefix_len), (payload_val, payload_len)])
+        ranges, [0, dod + 63, dod + 255, dod + 2047], dod
+    ).astype(np.int64).astype(np.uint64)  # two's complement for the 64-bit case
+    payload_len = np.select(ranges, [0, 7, 9, 12], 64).astype(np.int64)
+    prefix_len[first] = 0
+    payload_len[first] = 0
+    return [(prefix_val, prefix_len), (payload_val, payload_len)]
 
 
-def encode_gorilla(vals: np.ndarray) -> bytes:
-    """vals: int64. XOR bitstream for points 1..n-1 (first carried out-of-band)."""
+def _xor_fields(vals: np.ndarray, first: np.ndarray) -> list[tuple[np.ndarray, np.ndarray]]:
+    """(ctrl, lead, meaningful−1, meaningful bits) fields of the XOR
+    stream; each chunk's first value rides out of band (zero-length)."""
     v = np.asarray(vals, dtype=np.int64).astype(np.uint64)
-    if len(v) < 2:
-        return b""
-    x = v[1:] ^ v[:-1]
+    x = v ^ np.concatenate([v[:1], v[:-1]])
+    x[first] = 0
     nonzero = x != 0
     # bit_length via log2 on floats is unsafe for 64-bit; use a bit trick:
     # count leading zeros by comparing against powers of two cumulatively.
@@ -125,19 +124,59 @@ def encode_gorilla(vals: np.ndarray) -> bytes:
     lead = np.minimum(64 - bl, 63)
     meaningful = 64 - lead
 
-    ctrl = nonzero.astype(np.uint64)
-    ctrl_len = np.ones(len(x), dtype=np.int64)
+    ctrl_len = (~first).astype(np.int64)
     lead_len = np.where(nonzero, 6, 0).astype(np.int64)
-    mlen_len = np.where(nonzero, 6, 0).astype(np.int64)
     mbits_len = np.where(nonzero, meaningful, 0).astype(np.int64)
-    return _pack_fields(
-        [
-            (ctrl, ctrl_len),
-            (lead.astype(np.uint64), lead_len),
-            ((meaningful - 1).astype(np.uint64) & np.uint64(63), mlen_len),
-            (x, mbits_len),
-        ]
-    )
+    return [
+        (nonzero.astype(np.uint64), ctrl_len),
+        (lead.astype(np.uint64), lead_len),
+        ((meaningful - 1).astype(np.uint64) & np.uint64(63), lead_len),
+        (x, mbits_len),
+    ]
+
+
+def _pack_chunks(fields: list[tuple[np.ndarray, np.ndarray]], first: np.ndarray) -> list[bytes]:
+    """One byte-aligned bitstream per chunk (``first`` marks each chunk's
+    first point) from a single ``_pack_fields`` call: a trailing zero pad
+    field on each chunk's last point ends its stream on a byte boundary, so
+    every chunk's bytes are a slice of the packed whole."""
+    starts = np.flatnonzero(first)
+    if len(starts) == 0:
+        return []
+    bits = np.add.reduceat(sum(f[1] for f in fields), starts)
+    pad = np.zeros(len(first), dtype=np.int64)
+    pad[np.r_[starts[1:], len(first)] - 1] = -bits % 8
+    packed = _pack_fields([*fields, (np.zeros(len(first), dtype=np.uint64), pad)])
+    nbytes = (bits + 7) // 8
+    ends = np.cumsum(nbytes)
+    return [packed[lo:hi] for lo, hi in zip((ends - nbytes).tolist(), ends.tolist())]
+
+
+def _chunk_starts(keys: list[np.ndarray], n: int, max_points: int | None) -> np.ndarray:
+    """First-point mask over rows sorted by (keys, ts): a chunk opens at
+    every key change and every ``max_points`` points into a group."""
+    first = np.zeros(n, dtype=bool)
+    first[:1] = True
+    for k in keys:
+        first[1:] |= k[1:] != k[:-1]
+    if max_points:
+        group = np.flatnonzero(first)
+        pos = np.arange(n) - np.repeat(group, np.diff(np.r_[group, n]))
+        first |= pos % max_points == 0
+    return first
+
+
+def encode_dod(ts: np.ndarray) -> bytes:
+    """ts: int64 epoch seconds, ascending. Bitstream for points 1..n-1."""
+    ts = np.asarray(ts, dtype=np.int64)
+    first = _chunk_starts([], len(ts), None)
+    return b"".join(_pack_chunks(_dod_fields(ts, first), first))
+
+
+def encode_gorilla(vals: np.ndarray) -> bytes:
+    """vals: int64. XOR bitstream for points 1..n-1 (first carried out-of-band)."""
+    first = _chunk_starts([], len(vals), None)
+    return b"".join(_pack_chunks(_xor_fields(vals, first), first))
 
 
 # ---------------------------------------------------------------------------
@@ -250,7 +289,7 @@ def decode_gorilla(data: bytes, first_val: int, n: int) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# Spark integration: chunk tables via applyInPandas
+# Spark integration: chunk tables, one encode pass per Arrow batch
 # ---------------------------------------------------------------------------
 
 CHUNK_SCHEMA = (
@@ -260,36 +299,58 @@ CHUNK_SCHEMA = (
 )
 
 
-def _encode_group_fn(max_points):
-    def _encode_group(key, pdf):
-        host, tier = key[0], key[1]  # key may carry a trailing _month split key
-        pdf = pdf.sort_values("bucket_ts", kind="mergesort")
-        sec = (pdf["bucket_ts"].astype("datetime64[us]").astype("int64") // 1_000_000).to_numpy()
-        dc = pdf["doc_count"].to_numpy().astype(np.int64)
-        bs = pdf["bytes_sum"].to_numpy().astype(np.int64)
-        step = max_points or len(sec) or 1
-        rows = {k: [] for k in (
-            "host", "tier", "chunk_start", "ts_dod", "val_gorilla", "bytes_gorilla",
-            "n_points", "first_ts", "first_val", "first_bytes", "last_ts")}
-        for lo in range(0, len(sec), step):
-            hi = min(lo + step, len(sec))
-            rows["host"].append(host)
-            rows["tier"].append(tier)
-            rows["chunk_start"].append(pd.Timestamp(int(sec[lo]), unit="s"))
-            rows["ts_dod"].append(encode_dod(sec[lo:hi]))
-            rows["val_gorilla"].append(encode_gorilla(dc[lo:hi]))
-            rows["bytes_gorilla"].append(encode_gorilla(bs[lo:hi]))
-            rows["n_points"].append(hi - lo)
-            rows["first_ts"].append(int(sec[lo]))
-            rows["first_val"].append(int(dc[lo]))
-            rows["first_bytes"].append(int(bs[lo]))
-            # Actual last point (NOT chunk_start + n_points*step): the host
-            # series is not gap-filled, so a chunk's span is unbounded by its
-            # point count — time-range pruning must use the real extent.
-            rows["last_ts"].append(int(sec[hi - 1]))
-        return pd.DataFrame(rows)
+def _encode_rows(cols: dict, first: np.ndarray, tier: str) -> pd.DataFrame:
+    """Chunk rows of whole chunks (``first`` marks their first points)."""
+    sec, dc, bs = cols["sec"], cols["dc"], cols["bs"]
+    starts = np.flatnonzero(first)
+    ends = np.r_[starts[1:], len(sec)]
+    return pd.DataFrame({
+        "host": cols["host"][starts],
+        "tier": tier,
+        "chunk_start": pd.to_datetime(sec[starts], unit="s"),
+        "ts_dod": _pack_chunks(_dod_fields(sec, first), first),
+        "val_gorilla": _pack_chunks(_xor_fields(dc, first), first),
+        "bytes_gorilla": _pack_chunks(_xor_fields(bs, first), first),
+        "n_points": (ends - starts).astype(np.int32),
+        "first_ts": sec[starts],
+        "first_val": dc[starts],
+        "first_bytes": bs[starts],
+        # Actual last point (NOT chunk_start + n_points*step): the host
+        # series is not gap-filled, so a chunk's span is unbounded by its
+        # point count — time-range pruning must use the real extent.
+        "last_ts": sec[ends - 1],
+    })
 
-    return _encode_group
+
+def _encode_batches_fn(tier: str, max_points: int | None, key_cols: list[str]):
+    def starts(cols):
+        return _chunk_starts([cols[k] for k in key_cols], len(cols["sec"]), max_points)
+
+    def encode(batches):
+        carry = None
+        for pdf in batches:
+            cols = {k: pdf[k].to_numpy() for k in key_cols}
+            cols["sec"] = (
+                pdf["bucket_ts"].astype("datetime64[us]").astype("int64") // 1_000_000
+            ).to_numpy()
+            cols["dc"] = pdf["doc_count"].to_numpy().astype(np.int64)
+            cols["bs"] = pdf["bytes_sum"].to_numpy().astype(np.int64)
+            if carry is not None:
+                cols = {k: np.concatenate([carry[k], v]) for k, v in cols.items()}
+            n = len(cols["sec"])
+            if n == 0:
+                continue
+            first = starts(cols)
+            # the last chunk may continue in the next batch: carry it over
+            # (it starts a chunk, so chunk positions stay aligned there)
+            cut = int(np.flatnonzero(first)[-1])
+            carry = {k: v[cut:] for k, v in cols.items()}
+            if cut:
+                yield _encode_rows({k: v[:cut] for k, v in cols.items()}, first[:cut], tier)
+        if carry is not None:
+            yield _encode_rows(carry, starts(carry), tier)
+
+    return encode
 
 
 def encode_chunks(
@@ -303,19 +364,21 @@ def encode_chunks(
     100 TB path: bounded chunk size → bounded decode/update units and
     time-range pruning by chunk_start); default one chunk per host (matches
     the golden oracle chunks). ``split_by_month`` additionally closes chunks
-    at UTC month boundaries (the groupby-key time extension): every point of
+    at UTC month boundaries (the chunk-key time extension): every point of
     a chunk then falls inside month(chunk_start), which is what makes
     partition-level month pruning of the published chunk table EXACT — a
     month-spanning chunk would otherwise be invisible to it."""
     from pyspark.sql import functions as F
 
-    df = host_series_df.withColumn("tier", F.lit(tier))
-    keys = ["host", "tier"]
+    df = host_series_df.select("host", "bucket_ts", "doc_count", "bytes_sum")
+    keys = ["host"]
     if split_by_month:
         df = df.withColumn("_month", F.date_format("bucket_ts", "yyyy-MM"))
         keys.append("_month")
-    return df.groupBy(*keys).applyInPandas(
-        _encode_group_fn(max_points_per_chunk), schema=CHUNK_SCHEMA
+    return (
+        df.repartition(*keys)
+        .sortWithinPartitions(*keys, "bucket_ts")
+        .mapInPandas(_encode_batches_fn(tier, max_points_per_chunk, keys), schema=CHUNK_SCHEMA)
     )
 
 

@@ -27,9 +27,7 @@ class EngineConfig:
     retention: dict = field(
         default_factory=lambda: {"1m": 7 * 86400, "1h": 90 * 86400, "1d": 730 * 86400}
     )
-    # codecs
-    chunk_tiers: list[str] = field(default_factory=lambda: ["1h", "1d"])
-    # max points per compressed chunk (None = one chunk per (host, tier)).
+    # codecs: max points per compressed chunk (None = one chunk per (host, tier)).
     # Bounded chunks are the 100 TB path: bounded decode/update units and
     # time-range pruning by chunk_start.
     chunk_max_points: int | None = None

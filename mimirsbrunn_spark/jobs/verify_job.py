@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from .. import tiers
 from ..tables import Lineage, SnapshotTable, _footer_stats
+from .rollup_job import _series_retention_watermark
 
 TIER_PARENT = {"1h": "1m", "1d": "1h", "30d": "1d"}
 
@@ -88,7 +89,9 @@ def check_manifest(tbl: SnapshotTable, deep: bool = False) -> dict:
 def check_lineage(spark: SparkSession, out_dir: str) -> dict:
     """Lineage ledger ↔ series manifest: every committed day's recorded
     row count must equal the partition's manifest row count (both sides
-    are metadata arithmetic — no scan)."""
+    are metadata arithmetic — no scan). A day below the series' retention
+    watermark whose partition holds no rows was dropped by 1m retention,
+    not lost: it is counted as ``expired``, not as a mismatch."""
     series_tbl = SnapshotTable(f"{out_dir}/series_1m")
     lin = Lineage(f"{out_dir}/lineage")
     if not lin.table.exists() or not series_tbl.exists():
@@ -100,13 +103,17 @@ def check_lineage(spark: SparkSession, out_dir: str) -> dict:
         .select("partition_id", F.col("s.row_count").alias("rows"))
         .collect()
     )
+    watermark = _series_retention_watermark(series_tbl)
     mismatch = {}
+    expired = 0
     for r in rows:
         day = r.partition_id.removeprefix("day=")
         actual = series_tbl.partition_row_count(day)
-        if actual != r.rows:
+        if actual == 0 and watermark is not None and day < watermark:
+            expired += 1
+        elif actual != r.rows:
             mismatch[day] = {"lineage": r.rows, "manifest": actual}
-    return {"ok": not mismatch, "days": len(rows), "mismatch": mismatch}
+    return {"ok": not mismatch, "days": len(rows), "expired": expired, "mismatch": mismatch}
 
 
 def check_tier_consistency(

@@ -707,6 +707,16 @@ LINEAGE_SCHEMA = (
 METRICS_SCHEMA = "job_id string, stage string, key string, value double, ts timestamp"
 
 
+def _rows_df(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """Driver-side rows as a DataFrame built from a pandas frame, so Spark
+    takes the Arrow path and a metadata commit starts no Python worker."""
+    import pandas as pd
+
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=[f.split()[0] for f in schema.split(",")]), schema
+    )
+
+
 class Lineage:
     """Per-partition processing ledger: the resume key. A partition is
     skipped iff a lineage row exists for its (partition_id)."""
@@ -784,7 +794,7 @@ class Lineage:
                 dt.datetime.now(dt.timezone.utc).replace(tzinfo=None),
             )
         ]
-        self.table.commit(spark.createDataFrame(row, LINEAGE_SCHEMA), mode="append")
+        self.table.commit(_rows_df(spark, row, LINEAGE_SCHEMA), mode="append")
 
 
 class Metrics:
@@ -796,4 +806,4 @@ class Metrics:
 
         now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
         rows = [(job_id, stage, k, float(v), now) for k, v in kv.items()]
-        self.table.commit(spark.createDataFrame(rows, METRICS_SCHEMA), mode="append")
+        self.table.commit(_rows_df(spark, rows, METRICS_SCHEMA), mode="append")

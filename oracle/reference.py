@@ -311,32 +311,43 @@ def decode_gorilla_py(data: bytes, first_val: int, n: int) -> np.ndarray:
     return np.array(out, dtype=np.uint64).astype(np.int64)
 
 
-def chunks_for_tier(tier_df: pd.DataFrame, tier: str) -> pd.DataFrame:
+def chunks_for_tier(
+    tier_df: pd.DataFrame,
+    tier: str,
+    max_points: int | None = None,
+    split_by_month: bool = False,
+) -> pd.DataFrame:
     """Golden chunks table: one chunk per (host, tier) over the host-level
     series — ts_dod/val_gorilla binaries + out-of-band header columns.
-    val_gorilla encodes doc_count; bytes_gorilla encodes bytes_sum."""
+    val_gorilla encodes doc_count; bytes_gorilla encodes bytes_sum.
+    ``split_by_month`` closes chunks at UTC month boundaries and
+    ``max_points`` every that many points of a (host[, month]) series."""
     hs = host_series(tier_df)
+    hs = hs.assign(_month=hs["bucket_ts"].dt.strftime("%Y-%m") if split_by_month else "")
     rows = []
-    for host, g in hs.groupby("host", sort=True):
+    for (host, _), g in hs.groupby(["host", "_month"], sort=True):
         g = g.sort_values("bucket_ts", kind="mergesort")
-        sec = (g["bucket_ts"].astype("datetime64[us]").astype("int64") // 1_000_000).to_numpy()
-        dc = g["doc_count"].to_numpy().astype(np.int64)
-        bs = g["bytes_sum"].to_numpy().astype(np.int64)
-        rows.append(
-            (
-                host,
-                tier,
-                pd.Timestamp(sec[0], unit="s"),
-                encode_dod_py(sec),
-                encode_gorilla_py(dc),
-                encode_gorilla_py(bs),
-                len(sec),
-                int(sec[0]),
-                int(dc[0]),
-                int(bs[0]),
-                int(sec[-1]),
+        sec_all = (g["bucket_ts"].astype("datetime64[us]").astype("int64") // 1_000_000).to_numpy()
+        dc_all = g["doc_count"].to_numpy().astype(np.int64)
+        bs_all = g["bytes_sum"].to_numpy().astype(np.int64)
+        step = max_points or len(sec_all)
+        for lo in range(0, len(sec_all), step):
+            sec, dc, bs = (a[lo : lo + step] for a in (sec_all, dc_all, bs_all))
+            rows.append(
+                (
+                    host,
+                    tier,
+                    pd.Timestamp(sec[0], unit="s"),
+                    encode_dod_py(sec),
+                    encode_gorilla_py(dc),
+                    encode_gorilla_py(bs),
+                    len(sec),
+                    int(sec[0]),
+                    int(dc[0]),
+                    int(bs[0]),
+                    int(sec[-1]),
+                )
             )
-        )
     return pd.DataFrame(
         rows,
         columns=[

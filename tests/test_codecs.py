@@ -1,9 +1,15 @@
 """Codec gates: (1) vectorized numpy bitstreams byte-identical to the
-pure-Python oracle; (2) round-trip decode equality; (3) Spark applyInPandas
-chunk table round-trips to the exact tier rows (FIXTURES.md chunks table)."""
+pure-Python oracle; (2) round-trip decode equality; (3) the Spark chunk
+table (one mapInPandas encode pass per Arrow batch) round-trips to the exact
+tier rows (FIXTURES.md chunks table) and is byte-identical to the oracle's
+chunks for every chunking option, including groups that straddle Arrow
+batches."""
+
+import contextlib
 
 import numpy as np
 import pandas as pd
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -136,3 +142,106 @@ def test_chunk_partition_col_matches_driver_twin_beyond_9999_buckets(spark):
         for h in hosts:
             want = f"{chunk_host_bucket(h, buckets)}|2024-01"
             assert got[h] == want, (h, buckets, got[h], want)
+
+
+# ---------------------------------------------------------------------------
+# batch encoder vs oracle.chunks_for_tier (whole chunk rows, byte-exact)
+# ---------------------------------------------------------------------------
+
+
+@contextlib.contextmanager
+def _arrow_batch_rows(spark, n):
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _assert_chunks_match_oracle(chunks_df, host_series_pdf, tier, **kw):
+    got = chunks_df.toPandas()
+    want = oracle.chunks_for_tier(host_series_pdf, tier, **kw)
+    assert list(got.columns) == list(want.columns)
+    got, want = (
+        c.sort_values(["host", "first_ts"], kind="mergesort").reset_index(drop=True)
+        for c in (got, want)
+    )
+    assert len(got) == len(want)
+    for col in want.columns:
+        if col in ("ts_dod", "val_gorilla", "bytes_gorilla"):
+            assert [bytes(b) for b in got[col]] == list(want[col]), col
+        elif col == "chunk_start":
+            assert (got[col].astype("datetime64[s]") == want[col].astype("datetime64[s]")).all()
+        else:
+            assert got[col].tolist() == want[col].tolist(), col
+    return got
+
+
+@pytest.fixture(scope="module")
+def daily_hs(spark, pages_pdf):
+    """The 1d host series of the 35-day fixture (2024-01-01 → 2024-02-04,
+    so it crosses a month boundary) as a pandas frame and a Spark frame."""
+    pdf = oracle.host_series(oracle.rollup(oracle.series_1m(pages_pdf), "1d"))
+    return pdf, spark.createDataFrame(pdf)
+
+
+@pytest.mark.parametrize(
+    "max_points,split_by_month",
+    [(None, False), (1, False), (5, False), (50, False), (None, True), (5, True)],
+)
+def test_batch_encoder_matches_oracle(daily_hs, max_points, split_by_month):
+    pdf, df = daily_hs
+    got = _assert_chunks_match_oracle(
+        codecs.encode_chunks(df, "1d", max_points, split_by_month),
+        pdf, "1d", max_points=max_points, split_by_month=split_by_month,
+    )
+    if max_points:
+        assert (got["n_points"] <= max_points).all()
+    if max_points == 1:  # single-point chunks: nothing in band
+        assert not any(got[c].map(len).any() for c in ("ts_dod", "val_gorilla", "bytes_gorilla"))
+    if split_by_month:
+        months = pd.to_datetime(got["first_ts"], unit="s").dt.strftime("%Y-%m")
+        assert (months == pd.to_datetime(got["last_ts"], unit="s").dt.strftime("%Y-%m")).all()
+        assert months.nunique() == 2
+
+
+@pytest.mark.parametrize("max_points", [None, 5, 50])
+def test_batch_encoder_groups_straddle_arrow_batches(spark, daily_hs, max_points):
+    """7-row Arrow batches split every 35-point host series across batches:
+    the carried tail must encode exactly as if the series arrived whole."""
+    pdf, df = daily_hs
+    with _arrow_batch_rows(spark, 7):
+        _assert_chunks_match_oracle(
+            codecs.encode_chunks(df, "1d", max_points, split_by_month=True),
+            pdf, "1d", max_points=max_points, split_by_month=True,
+        )
+
+
+_gap = st.one_of(st.integers(1, 120), st.integers(1, 2**27))
+_val = st.integers(-(2**62), 2**62)
+
+
+@settings(max_examples=15, deadline=None)
+@given(
+    st.lists(st.tuples(st.sampled_from("abc"), _gap, _val, _val), min_size=1, max_size=40),
+    st.sampled_from([None, 1, 3]),
+)
+def test_batch_encoder_property(spark, rows, max_points):
+    """Gaps up to 2**27 s give dods in the 64-bit range of the ladder, and
+    values span negative int64s; hosts of a single point give single-point
+    chunks."""
+    pdf = pd.DataFrame(rows, columns=["host", "gap", "doc_count", "bytes_sum"])
+    sec = 1_700_000_000 + pdf.groupby("host")["gap"].cumsum()
+    pdf = pd.DataFrame({
+        "host": pdf["host"],
+        "bucket_ts": pd.to_datetime(sec, unit="s"),
+        "doc_count": pdf["doc_count"],
+        "bytes_sum": pdf["bytes_sum"],
+    })
+    with _arrow_batch_rows(spark, 7):
+        _assert_chunks_match_oracle(
+            codecs.encode_chunks(spark.createDataFrame(pdf), "1h", max_points),
+            pdf, "1h", max_points=max_points,
+        )

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from mimirsbrunn_spark.jobs.rollup_job import run_rollup_job
 from mimirsbrunn_spark.jobs.verify_job import (
+    check_lineage,
     check_manifest,
     check_tier_consistency,
     verify_publication,
@@ -112,6 +113,10 @@ def test_preserved_history_not_flagged(spark, small_pages_path, tmp_path):
     r = check_tier_consistency(spark, out, "1h")
     assert r["ok"], r
     assert r["preserved_rows"] > 0
+    # the days 1m retention dropped are expired, not lineage mismatches
+    r = check_lineage(spark, out)
+    assert r["ok"], r
+    assert r["expired"] > 0
 
 
 def test_aux_sketch_tiers_checked(spark, small_pages_path, tmp_path):
